@@ -4,8 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# repartition width in multiples of the session's defaultParallelism
+_SPREAD = 2
 
-def parallel_groups(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
+
+def parallel_groups(df: DataFrame, *keys: str) -> DataFrame:
     """Explicitly hash-partition on the group keys before a grouped pandas
     UDF. AQE's partition coalescing sizes shuffles by *bytes*, which is
     right for JVM relational operators but wrong for grouped UDFs whose
@@ -15,10 +18,10 @@ def parallel_groups(df: DataFrame, *keys: str, factor: int = 2) -> DataFrame:
     user-specified repartition pins the exchange; groupBy reuses it because
     hash(keys) already satisfies the required clustering."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * factor, *keys)
+    return df.repartition(sc.defaultParallelism * _SPREAD, *keys)
 
 
-def spread_scan(df: DataFrame, factor: int = 2) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition an UNDER-PARTITIONED scan before CPU-dense
     map-only work (regex scans, per-row scoring). Parquet splits at row-
     group granularity, so a one-row-group file scans as ONE task and every
@@ -31,4 +34,4 @@ def spread_scan(df: DataFrame, factor: int = 2) -> DataFrame:
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
-    return df.repartition(sc.defaultParallelism * factor)
+    return df.repartition(sc.defaultParallelism * _SPREAD)

@@ -1054,9 +1054,7 @@ def q_simhash_neardup(spark, sf):
 
     _utc(spark)
     docs = read_table(spark, sf, "documents")
-    pairs = simhash_dedup(
-        docs, max_hamming=SIMHASH_MAX_HAMMING, blocks=4, portable=True
-    )
+    pairs = simhash_dedup(docs, max_hamming=SIMHASH_MAX_HAMMING, blocks=4)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -3036,9 +3034,7 @@ def _run_stream_query(
     # cost (A/B at sf0.1: 2.0 s -> 1.45 s per stream query, round 7).
     # Scale-adaptive by construction (tracks cluster cores); restored
     # after the run so batch queries keep the session default.
-    n_state = os.environ.get(
-        "ROVE_STREAM_STATE_PARTITIONS", str(spark.sparkContext.defaultParallelism)
-    )
+    n_state = str(spark.sparkContext.defaultParallelism)
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n_state)
     try:

@@ -95,7 +95,7 @@ on = ["conv_id", "ts"]
 
 
 def test_buddy_step_through_engine(spark):
-    from rove_spark.operators.spatial import with_synthetic_coords
+    from rove_spark.operators.spatial import with_synthetic_coords_portable
 
     toml = """
 [[step]]
@@ -105,7 +105,7 @@ radii = [500000.0]
 nums_min = [2]
 threshold = 30.0
 """
-    df = with_synthetic_coords(_signals(spark))
+    df = with_synthetic_coords_portable(_signals(spark))
     # one shared time slice so every conversation is a buddy candidate
     df = df.withColumn("ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
     df = df.groupBy("conv_id", "ts", "lat", "lon", "elev").agg(
