@@ -31,11 +31,11 @@ array-expressible); small chunks (the real engine regime: ~24-point
 day chunks) use a plain-int scalar loop with the paper's adaptive
 window policy (numpy per-call overhead would dominate at that size).
 Both emit valid Gorilla streams — the decoder is policy-agnostic.
-``compress_series`` additionally amortizes packing across a whole
-(series, month) group: every chunk's entries append into one
-`_BatchPacker`, ONE `_pack_bits` call packs the group, and per-chunk
-blobs are sliced out at byte-aligned offsets. Chunks are bounded and
-encode inside ``applyInPandas``, so the cost parallelizes across
+``compress_series`` additionally amortizes packing across a whole Arrow
+batch: every chunk's entries append into one `_BatchPacker`, ONE
+`_pack_bits` call packs the batch, and per-chunk blobs are sliced out at
+byte-aligned offsets. The encode runs inside ``mapInArrow`` over
+(series, chunk)-sorted partitions, so the cost parallelizes across
 executors and never touches the driver.
 """
 
@@ -61,8 +61,8 @@ class _BatchPacker:
     them ALL with one `_pack_bits` call, and slices the per-blob bytes
     back out. Each blob is padded to a byte boundary so the slice is
     self-contained — identical bytes to packing it alone. Amortizes the
-    vectorized packing overhead across every chunk of an
-    ``applyInPandas`` group."""
+    vectorized packing overhead across every chunk of an Arrow batch
+    (`_encode_runs`)."""
 
     __slots__ = ("_codes", "_nbits", "_bit", "_spans")
 
@@ -555,93 +555,114 @@ def compress_series(
     series_col: str = "conv_id",
     ts_col: str = "ts",
     chunk: str = "day",
-    group_chunk: str = "month",
 ):
     """DataFrame (series, ts, value[, …]) → Gorilla chunk table, one row
     per (series, ``chunk`` start).
 
-    Two-level chunking: the *shuffle group* is (series, ``group_chunk``)
-    — coarse, so each grouped-UDF invocation amortizes its fixed Arrow/
-    pandas overhead over many points (44k day-groups of ~24 points ran 6×
-    slower than 2k month-groups emitting the same day-chunks) — while the
-    *codec chunk* stays fine-grained (``chunk``) for retention/seek
-    granularity. Group size stays bounded (series × month), which is the
-    hot-key story for this stage (SURVEY §4)."""
-    import pandas as pd
+    One vectorised encode per Arrow batch: rows are hash-partitioned on
+    (series, chunk) through ``parallel_groups`` (a hot series spreads
+    over its chunks, never one task), sorted within each partition by
+    (series, chunk, epoch) in the JVM, and streamed through
+    ``mapInArrow``. Each batch's complete (series, chunk) runs encode in
+    one `_encode_runs` call; the trailing run may continue in the next
+    batch, so it is held back and prepended to it. A worker therefore
+    holds one Arrow batch plus one codec chunk, however long the series.
+    The codec chunk (``chunk``) is the retention/seek granularity."""
     from pyspark.sql import functions as F
-
-    def enc(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # one group = one (series, group_chunk); entry construction AND
-        # bit-packing are vectorized across ALL its codec chunks at once
-        # (_ts_entries_grouped/_val_entries_grouped + one _pack_bits via
-        # _BatchPacker) — per-chunk numpy calls never amortize at the real
-        # ~24-point day-chunk size
-        pdf = pdf.sort_values("_epoch")
-        series = pdf["_series"].iloc[0]
-        epochs = pdf["_epoch"].to_numpy(np.int64)
-        chunk_ids = pdf["_chunk"].to_numpy()
-        raw = pdf[value_col].to_numpy(dtype=np.float32, na_value=np.nan)
-        present = pdf[value_col].notna().to_numpy()
-        # codec-chunk boundaries (contiguous runs after the epoch sort)
-        bnd = np.empty(len(epochs), bool)
-        bnd[0] = True
-        bnd[1:] = chunk_ids[1:] != chunk_ids[:-1]
-        seg_first = np.flatnonzero(bnd)
-        seg_lens = np.diff(np.concatenate([seg_first, [len(epochs)]]))
-        vals = raw[present]
-        val_lens = np.add.reduceat(present.astype(np.int64), seg_first)
-        tc, tb, toff = _ts_entries_grouped(epochs, seg_lens)
-        vc, vb, voff = _val_entries_grouped(vals, val_lens)
-        packer = _BatchPacker()
-        packer.add_many(tc, tb, toff)  # blobs 0..K-1: timestamps
-        packer.add_many(vc, vb, voff)  # blobs K..2K-1: values
-        blobs = packer.blobs()
-        K = len(seg_first)
-        vstart = np.cumsum(val_lens) - val_lens
-        out = []
-        for k, (s, n) in enumerate(zip(seg_first.tolist(), seg_lens.tolist())):
-            pres_k = present[s : s + n]
-            vals_k = vals[vstart[k] : vstart[k] + val_lens[k]]
-            crc = zlib.crc32(epochs[s : s + n].tobytes() + vals_k.tobytes()) & 0xFFFFFFFF
-            out.append(
-                (
-                    series,
-                    chunk_ids[s],
-                    n,
-                    int(val_lens[k]),
-                    blobs[k],
-                    blobs[K + k],
-                    np.packbits(pres_k).tobytes(),
-                    crc,
-                )
-            )
-        return pd.DataFrame(
-            out,
-            columns=[
-                "series_id",
-                "chunk_start",
-                "n_points",
-                "n_present",
-                "ts_codec",
-                "val_codec",
-                "presence",
-                "checksum",
-            ],
-        )
 
     from rove_spark.operators.util import parallel_groups
 
+    def enc(batches):
+        held = None  # the open trailing run: (series, chunk, epoch, raw)
+        chunk_type = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            chunk_type = rb.schema.field("_chunk").type
+            cols = (
+                rb.column("_series").to_numpy(zero_copy_only=False),
+                rb.column("_chunk").to_numpy().view(np.int64),
+                rb.column("_epoch").to_numpy(),
+                rb.column(value_col).to_numpy(zero_copy_only=False),
+            )
+            if held is not None:
+                cols = tuple(np.concatenate([h, c]) for h, c in zip(held, cols))
+            series, chunk_us = cols[0], cols[1]
+            bnd = np.empty(len(series), bool)
+            bnd[0] = True
+            bnd[1:] = (series[1:] != series[:-1]) | (chunk_us[1:] != chunk_us[:-1])
+            seg_first = np.flatnonzero(bnd)
+            last = int(seg_first[-1])
+            held = tuple(c[last:].copy() for c in cols)
+            if last:
+                yield _encode_runs(*(c[:last] for c in cols), seg_first[:-1], chunk_type)
+        if held is not None:
+            yield _encode_runs(*held, np.zeros(1, np.int64), chunk_type)
+
     prepped = df.select(
         F.col(series_col).cast("string").alias("_series"),
-        F.date_trunc(group_chunk, F.col(ts_col)).alias("_group"),
         F.date_trunc(chunk, F.col(ts_col)).alias("_chunk"),
         F.unix_timestamp(F.col(ts_col)).alias("_epoch"),
         F.col(value_col).cast("float").alias(value_col),
     )
     return (
-        parallel_groups(prepped, "_series", "_group")
-        .groupBy("_series", "_group")
-        .applyInPandas(enc, CHUNK_SCHEMA)
+        parallel_groups(prepped, "_series", "_chunk")
+        .sortWithinPartitions("_series", "_chunk", "_epoch")
+        .mapInArrow(enc, CHUNK_SCHEMA)
+    )
+
+
+def _encode_runs(series, chunk_us, epochs, raw, seg_first, chunk_type):
+    """Encode the (series, chunk) runs starting at ``seg_first`` of
+    sorted rows into one Arrow batch of ``CHUNK_SCHEMA`` rows. Entry
+    construction and bit-packing are vectorised across every run at once
+    (`_ts_entries_grouped`/`_val_entries_grouped` + one `_pack_bits` via
+    `_BatchPacker`): per-run numpy calls never amortise at the real
+    ~24-point day-chunk size. NULL and NaN values are gaps."""
+    import pyarrow as pa
+
+    epochs = np.asarray(epochs, dtype=np.int64)
+    raw = np.asarray(raw, dtype=np.float32)
+    present = ~np.isnan(raw)
+    seg_lens = np.diff(np.append(seg_first, len(epochs)))
+    vals = raw[present]
+    val_lens = np.add.reduceat(present.astype(np.int64), seg_first)
+    tc, tb, toff = _ts_entries_grouped(epochs, seg_lens)
+    vc, vb, voff = _val_entries_grouped(vals, val_lens)
+    packer = _BatchPacker()
+    packer.add_many(tc, tb, toff)  # blobs 0..K-1: timestamps
+    packer.add_many(vc, vb, voff)  # blobs K..2K-1: values
+    blobs = packer.blobs()
+    K = len(seg_first)
+    vstart = np.cumsum(val_lens) - val_lens
+    presence, checksum = [], []
+    for s, n, v0, nv in zip(
+        seg_first.tolist(), seg_lens.tolist(), vstart.tolist(), val_lens.tolist()
+    ):
+        presence.append(np.packbits(present[s : s + n]).tobytes())
+        raw_k = epochs[s : s + n].tobytes() + vals[v0 : v0 + nv].tobytes()
+        checksum.append(zlib.crc32(raw_k) & 0xFFFFFFFF)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(series[seg_first], pa.string()),
+            pa.array(chunk_us[seg_first], chunk_type),
+            pa.array(seg_lens, pa.int32()),
+            pa.array(val_lens, pa.int32()),
+            pa.array(blobs[:K], pa.binary()),
+            pa.array(blobs[K:], pa.binary()),
+            pa.array(presence, pa.binary()),
+            pa.array(checksum, pa.int64()),
+        ],
+        names=[
+            "series_id",
+            "chunk_start",
+            "n_points",
+            "n_present",
+            "ts_codec",
+            "val_codec",
+            "presence",
+            "checksum",
+        ],
     )
 
 

@@ -565,8 +565,9 @@ def retention_compact(
       manifest state notwithstanding — chunks are never the only copy
       until their write committed.
 
-    Scale shape: the encode is ``compress_series``'s grouped-Arrow stage
-    (bounded (series, month) groups through ``parallel_groups``); reads
+    Scale shape: the encode is ``compress_series``' ``mapInArrow`` stage
+    (hash-partitioned on (series, day) through ``parallel_groups``, one
+    batch plus one day chunk in a worker's memory); reads
     are day-partition-pruned on both sides; the drop is metadata-only.
     The chunk write is re-clustered onto day-aligned partitions first:
     the encode stage leaves many mixed-day partitions, and a bare

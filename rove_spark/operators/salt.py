@@ -9,7 +9,10 @@ therefore on us, two complementary ways:
 
 1. **Structural salting** (preferred): make the group key
    (series, calendar_chunk) — a conversation becomes many bounded chunks.
-   Used by gorilla.compress_series; ``chunk_key`` exposes it generically.
+   gorilla.compress_series partitions on (series, day) this way and
+   streams each partition through ``mapInArrow``, so neither a task's
+   share nor a worker's memory grows with one series' length;
+   ``chunk_key`` exposes the key generically.
    Semantics-preserving for chunk-local operators (codec, per-chunk stats).
 
 2. **Explicit hash salting** (for operators that can do partial→final

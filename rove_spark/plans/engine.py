@@ -22,7 +22,7 @@ from datetime import datetime, timedelta
 from pathlib import Path
 from time import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rove_spark.config import KNOWN_CHECKS, Pipeline, PipelineStep, load_pipelines
@@ -329,19 +329,22 @@ class Engine:
             tier_out = tier_df.withColumn(
                 "day", F.date_format(F.date_trunc("day", "bucket_ts"), "yyyy-MM-dd")
             )
+            # per-partition metrics ride on the write itself: one observed
+            # sum per todo day, no read-back scan of the written tier
+            rows = Observation()
+            tier_out = tier_out.observe(
+                rows,
+                *[
+                    F.sum(F.when(F.col("day") == d, F.col("n_turns"))).alias(d)
+                    for d in todo
+                ],
+            )
             table.overwrite_partitions(
                 tier_out, lineage={"fingerprint": fp, "tier": tier_name}
             )
-            # per-partition metrics from the written tier (cheap scan)
-            stats = (
-                table.read(self.spark)
-                .groupBy("day")
-                .agg(F.sum("n_turns").alias("rows"))
-                .collect()
-            )
-            for r in stats:
-                if str(r.day) in metrics:
-                    metrics[str(r.day)][f"rows_{tier_name}"] = r.rows
+            for d, n in rows.get.items():
+                if n is not None:
+                    metrics[d][f"rows_{tier_name}"] = n
         tiers["1m"].unpersist()  # build_tiers persists it; this job owns it
         elapsed = time() - t0
         for d in todo:

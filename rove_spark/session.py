@@ -81,6 +81,12 @@ def _pin_blas_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
+#: Python worker daemon launched by Spark in place of ``pyspark.daemon``:
+#: it stops every task from re-parsing the central directory of each zip
+#: on ``sys.path`` (see ``worker_daemon``). A module name, not a knob.
+_DAEMON_MODULE = "rove_spark.worker_daemon"
+
+
 def get_spark(
     app_name: str = "rove_spark",
     master: str | None = None,
@@ -119,6 +125,7 @@ def get_spark(
         )
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
         # cluster deployments: ship the BLAS pinning to executor-side
         # Python workers too (local mode inherits the driver env)
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", os.environ["OPENBLAS_NUM_THREADS"])

@@ -99,9 +99,11 @@ def main() -> None:
     sections.append(
         (
             "Gorilla chunk compression",
-            "Explicit `REPARTITION_BY_NUM` on the group keys precedes "
-            "`FlatMapGroupsInPandas` — AQE's byte-based coalescing must not "
-            "serialize CPU-heavy grouped-UDF stages (CLAUDE.md).",
+            "Explicit `REPARTITION_BY_NUM` on (series, day) and a "
+            "`Sort` within partitions precede `MapInArrow` — AQE's "
+            "byte-based coalescing must not serialize the CPU-heavy encode "
+            "stage (CLAUDE.md); the encode streams sorted batches, no "
+            "grouping.",
             formatted(chunks),
         )
     )

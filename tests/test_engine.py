@@ -175,7 +175,13 @@ def test_run_job_checkpoint_resume(tmp_path, spark):
     assert set(recs) == set(days)
     any_rec = recs[days[0]]
     assert any_rec["lineage"]["pipeline"] == "ta"
-    assert any_rec["metrics"]["rows_1m"] > 0
+    # per-day tier row metrics (observed on each tier's write) equal a
+    # direct count of the day's input turns, in every tier
+    dcol = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+    direct = {r.d: r["count"] for r in df.groupBy(dcol.alias("d")).count().collect()}
+    for d in days:
+        for tier in ("1m", "1h", "1d"):
+            assert recs[d]["metrics"][f"rows_{tier}"] == direct[d], (d, tier)
 
 
 def test_run_job_backfill_reflags_following_day(tmp_path, spark):

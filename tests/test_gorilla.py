@@ -196,6 +196,49 @@ def test_spark_compress_decompress_roundtrip(spark):
     assert sizes.b < 8 * sizes.n
 
 
+def test_spark_compress_chunk_straddles_arrow_batches(spark):
+    """With tiny Arrow batches every (series, day) chunk spans several
+    batches: the open trailing chunk is carried across them, so each
+    (series, day) still yields exactly one row, and the round trip is
+    exact (gaps included)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    rows = []
+    t0 = dt.datetime(2024, 1, 1, 22, 0)
+    for s in ("a", "b", "c"):
+        for i in range(300):  # 5 h at 1 min: two days per series
+            v = None if i % 7 == 3 else ((i * 37 + ord(s)) % 101) / 4.0  # f32-exact
+            rows.append((s, t0 + dt.timedelta(minutes=i), v))
+    df = spark.createDataFrame(rows, "sid string, ts timestamp, v float")
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        chunks = gorilla.compress_series(df, "v", series_col="sid").cache()
+        keys = [
+            (r.series_id, r.chunk_start)
+            for r in chunks.select("series_id", "chunk_start").collect()
+        ]
+        back = gorilla.decompress_series(chunks, value_col="v").collect()
+        chunks.unpersist()
+    finally:
+        spark.conf.set(key, old)
+
+    days = {
+        (r.sid, r.d)
+        for r in df.select("sid", F.date_trunc("day", "ts").alias("d")).collect()
+    }
+    assert len(days) == 6
+    assert sorted(keys) == sorted(days)
+    want = sorted((s, t, v) for s, t, v in rows)
+    got = sorted((r.series_id, r.ts, r.v) for r in back)
+    assert got == want
+    assert all(r.is_gap == (r.v is None) for r in back)
+
+
 def test_spark_checksum_detects_corruption(spark):
     import pyspark
     from pyspark.sql import functions as F

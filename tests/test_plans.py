@@ -93,15 +93,16 @@ def test_dynamic_range_broadcasts_bounds(spark, parquet_transcripts):
 
 
 def test_grouped_udf_keeps_parallel_partitioning(spark, parquet_transcripts):
-    """The explicit repartition before grouped pandas UDFs must survive in
-    the plan (AQE byte-based coalescing would serialize the stage)."""
+    """The explicit repartition before the Gorilla encode's Arrow stage
+    must survive in the plan (AQE byte-based coalescing would serialize
+    the stage)."""
     from rove_spark.operators.gorilla import compress_series
 
     df = spark.read.parquet(parquet_transcripts).withColumn("v", F.length("text").cast("float"))
     chunks = compress_series(df, "v")
     plan = _plan(chunks)
     assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan or "hashpartitioning" in plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_bucketed_layout_eliminates_exchange(spark, parquet_transcripts, tmp_path):

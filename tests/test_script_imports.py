@@ -4,12 +4,15 @@ the perfbench harness import must exist.
 These files are not imported by any other test, so a deleted or renamed
 operator would otherwise only surface when someone runs the script. The
 scan is static (AST) and resolution is a plain module import — no Spark
-session is started."""
+session is started. The same holds for the worker daemon module that
+``get_spark`` names in the session conf."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
+import os
 from pathlib import Path
 
 import pytest
@@ -63,3 +66,39 @@ def test_rove_spark_imports_resolve(path):
         if not _resolves(module, name)
     ]
     assert not missing, "unresolved imports:\n" + "\n".join(missing)
+
+
+def test_daemon_module_resolves_to_package_file(monkeypatch):
+    """``get_spark`` names the Python worker daemon by module path. A
+    rename of that module would only surface when a Python task starts,
+    so read the value ``get_spark`` sets (with a recording builder, no
+    Spark) and check that it resolves to a file of this package."""
+    from rove_spark import session
+
+    conf: dict[str, str] = {}
+
+    class Builder:
+        def __getattr__(self, _name):
+            return lambda *a, **k: self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return None
+
+    class FakeSession:
+        builder = Builder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    monkeypatch.setattr(session, "probe_iceberg", lambda: None)
+    for var in ("PYTHONPATH", *session._BLAS_ENV):
+        monkeypatch.setenv(var, os.environ.get(var, ""))
+    session.get_spark("daemon_probe", master="local[1]")
+
+    spec = importlib.util.find_spec(conf["spark.python.daemon.module"])
+    assert spec is not None and spec.origin is not None
+    origin = Path(spec.origin).resolve()
+    assert origin.is_file()
+    assert origin.parent == ROOT / "rove_spark", origin
